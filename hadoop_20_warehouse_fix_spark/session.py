@@ -33,10 +33,16 @@ from pyspark.sql import SparkSession
 #: because at 100 TB the hot partition dwarfs 256 MB and the split fires
 #: unaided. See SCALING.md round 8 (the 3.02 s -> 1.38 s split) and
 #: ``operators.joins.choose_skew_join_strategy`` (the per-join picker
-#: this session-level answer complements).
+#: this session-level answer complements). The skew FACTOR comes down
+#: too: shuffle partitions default to the core count, and with N
+#: partitions a key holding a fraction f of the rows sits at
+#: 1 + f·N/(1-f) times the median — exactly 5.0× for a 50%-hot key on a
+#: 4-core laptop, which the default factor 5 (a strict comparison) never
+#: splits. Factor 2 splits any key above 1/(N+1) of the rows.
 _DEV_PROFILE_CONF = {
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8m",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
 }
 
 

@@ -64,21 +64,19 @@ def _fs_for(spark: SparkSession, path: str):
 
 
 def _marker_keyed_meta(spark: SparkSession, table_path: str) -> dict | None:
-    """The keyed-table meta when ``table_path`` is a marker-commit
-    keyed table, else None. Marker tables keep their data in HIDDEN
-    versioned dirs resolved through a commit manifest, so every
-    listing in this module must go through that manifest instead of
-    the directory tree (round 12 — and old version dirs are retained
-    one generation for in-flight readers, so a tree walk would count
-    superseded files as live)."""
+    """The keyed-table meta when ``table_path`` is a keyed table, else
+    None. Keyed tables keep their data in HIDDEN versioned dirs
+    resolved through a commit manifest, so every listing in this module
+    must go through that manifest instead of the directory tree (round
+    12 — and old version dirs are retained for in-flight readers, so a
+    tree walk would count superseded files as live)."""
     from hadoop_20_warehouse_fix_spark.sources import keyed as K
 
     fs, _, jvm = _fs_for(spark, table_path)
     root = table_path.rstrip("/")
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}/{K._META}")):
         return None
-    meta = K.read_keyed_meta(spark, root)
-    return meta if meta.get("commit") == "marker" else None
+    return K.read_keyed_meta(spark, root)
 
 
 def _marker_live_dirs(spark: SparkSession, table_path: str) -> list[str]:

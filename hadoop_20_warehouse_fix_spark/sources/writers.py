@@ -150,17 +150,20 @@ def ensure_managed_creatable(spark: SparkSession, table_name: str) -> None:
     directory. If the catalog has no table under this name, the
     directory is an orphan by definition: delete it so the create can
     proceed. No-op when the table exists (its location is live, and the
-    caller's own DROP/overwrite handles it) or the directory is absent.
-    Names may be ``db.table``-qualified; the default database maps to
-    ``<warehouse>/<table>``, others to ``<warehouse>/<db>.db/<table>``."""
-    if spark.catalog.tableExists(table_name):
-        return
+    caller's own DROP/overwrite handles it), the database does not
+    exist, or the directory is absent. An unqualified name resolves in
+    the CURRENT database for both the existence check and the path —
+    checking one database and deleting in another would wipe a live
+    table — and the directory is ``<database location>/<table>`` with
+    the location taken from the catalog."""
     parts = table_name.split(".")
+    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
+    table = parts[-1]
+    if spark.catalog.tableExists(f"{db}.{table}") or not spark.catalog.databaseExists(db):
+        return
     jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    if len(parts) > 1 and parts[-2].lower() != "default":
-        base = jvm.org.apache.hadoop.fs.Path(base, parts[-2].lower() + ".db")
-    hpath = jvm.org.apache.hadoop.fs.Path(base, parts[-1].lower())
+    base = jvm.org.apache.hadoop.fs.Path(spark.catalog.getDatabase(db).locationUri)
+    hpath = jvm.org.apache.hadoop.fs.Path(base, table.lower())
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.delete(hpath, True)
 

@@ -3,7 +3,7 @@
 A writer that legitimately outlives ``lock_ttl_sec`` (large COW
 backfill, slow compaction) has its lease broken and re-issued to a
 successor. Before this round the zombie's in-flight commit
-(``_swap_buckets`` / ``_marker_publish`` / delta rename) proceeded
+(``_marker_publish`` / the delta ``_COMMITTED`` marker) proceeded
 anyway — exactly the interleaved-write corruption the lock exists to
 prevent. Now every commit point re-verifies the lock token immediately
 before mutating shared state and aborts loudly on mismatch.
@@ -25,16 +25,12 @@ import hadoop_20_warehouse_fix_spark.sources.keyed as K
 
 @pytest.fixture()
 def table(spark):
-    # rename protocol: these pins assert rename-era commit points (the
-    # delta-dir rename IS the commit, so an aborted batch leaves NO seq
-    # dir). Marker fencing — where the _COMMITTED/manifest PUT commits
-    # — is pinned separately below.
     tmp = tempfile.mkdtemp(prefix="keyed_fence_")
     path = f"{tmp}/tab"
     base = spark.range(1_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
     )
-    K.write_keyed_table(base, path, ["k"], num_buckets=4, commit="rename")
+    K.write_keyed_table(base, path, ["k"], num_buckets=4)
     yield path
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -53,7 +49,7 @@ def _usurp(path: str) -> None:
 
 def test_mor_commit_aborts_when_lease_lost(spark, table, monkeypatch):
     """The delta commit fences: lease usurped mid-job → abort BEFORE
-    the _COMMITTED/rename, no delta lands, feed stays empty."""
+    the _COMMITTED marker, no delta commits, feed stays empty."""
     real = K._read_seq_hwm
 
     def usurp_then(spark_, path_):
@@ -66,16 +62,17 @@ def test_mor_commit_aborts_when_lease_lost(spark, table, monkeypatch):
         K.upsert_keyed_table(spark, table, batch, mode="mor")
     monkeypatch.undo()
     os.remove(os.path.join(table, K._WRITER_LOCK))  # clear the usurper
-    assert not os.path.exists(os.path.join(table, K._DELTA_DIR, "seq=1")), \
-        "zombie's delta must not commit"
+    assert not os.path.exists(
+        os.path.join(table, K._DELTA_DIR, "seq=1", K._COMMITTED_MARK)
+    ), "zombie's delta must not commit"
     tab = K.read_keyed_table(spark, table)
     assert tab.filter(F.col("k") == 1).first().v == 2, "old value intact"
     assert K.read_keyed_changes(spark, table).count() == 0
 
 
 def test_cow_swap_aborts_when_lease_lost(spark, table, monkeypatch):
-    """The bucket swap fences at entry: the staged merge never swaps in
-    and every bucket keeps its pre-batch contents."""
+    """The bucket publish fences before its manifest PUT: the staged
+    merge never commits and every bucket keeps its pre-batch contents."""
     real = K._write_layout
 
     def usurp_then(df, dest, n_parts, meta):
@@ -106,15 +103,15 @@ def test_fence_noop_without_registered_lease(spark, table):
 
 
 def test_marker_publish_fences_manifest_put(spark, monkeypatch):
-    """Marker protocol: the manifest PUT is the commit — a usurped
-    lease aborts before it, so readers keep resolving the old commit."""
+    """The manifest PUT is the commit — a usurped lease aborts before
+    it, so readers keep resolving the old commit."""
     tmp = tempfile.mkdtemp(prefix="keyed_fence_mk_")
     path = f"{tmp}/tab"
     try:
         base = spark.range(100).select(
             F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("m").alias("tag")
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=2, commit="marker")
+        K.write_keyed_table(base, path, ["k"], num_buckets=2)
         cm_before = K._current_commit(spark, path)
 
         real = K._write_layout
@@ -137,8 +134,7 @@ def test_marker_publish_fences_manifest_put(spark, monkeypatch):
 
 
 def test_marker_mor_commit_fences_before_committed_mark(spark, monkeypatch):
-    """Marker protocol (the round-14 default): the MOR commit point is
-    the _COMMITTED marker write. A usurped lease aborts before it — the
+    """The MOR commit point is the _COMMITTED marker write. A usurped lease aborts before it — the
     staged seq dir may remain on disk but carries no marker, readers
     and the change feed ignore it, and the recovery sweep GCs it."""
     tmp = tempfile.mkdtemp(prefix="keyed_fence_mm_")
@@ -148,8 +144,7 @@ def test_marker_mor_commit_fences_before_committed_mark(spark, monkeypatch):
             F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
             F.lit("base").alias("tag"),
         )
-        K.write_keyed_table(base, path, ["k"], num_buckets=4)  # marker default
-        assert K.read_keyed_meta(spark, path)["commit"] == "marker"
+        K.write_keyed_table(base, path, ["k"], num_buckets=4)
         real = K._read_seq_hwm
 
         def usurp_then(spark_, path_):

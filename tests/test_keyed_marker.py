@@ -1,5 +1,6 @@
-"""Marker-commit keyed tables (round 12, brief #6): the object-store
-protocol — no rename on any committed path. Readers resolve bucket data
+"""Commit-manifest keyed tables (round 12, brief #6; the only keyed
+protocol since the rename path was deleted) — no rename on any
+committed path. Readers resolve bucket data
 through the highest ``_commits/commit-<n>.json`` manifest and count a
 delta seq dir only once its ``_COMMITTED`` marker exists, so the crash
 matrix is: kill BEFORE the manifest/marker PUT → old state, garbage
@@ -38,7 +39,7 @@ def marker(spark):
     base = spark.range(2_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
     )
-    write_keyed_table(base, path, ["k"], num_buckets=8, commit="marker")
+    write_keyed_table(base, path, ["k"], num_buckets=8)
     yield path
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -47,54 +48,32 @@ def _ups(spark, rows):
     return spark.createDataFrame(rows, "k long, v long, tag string")
 
 
-def test_scheme_guard():
-    for scheme in ("s3a", "s3", "gs", "abfss", "oss"):
-        with pytest.raises(ValueError, match="atomic directory rename"):
-            K._check_commit_scheme(scheme, "rename")
-        K._check_commit_scheme(scheme, "marker")  # allowed
-    for scheme in ("hdfs", "file", None, "viewfs"):
-        K._check_commit_scheme(scheme, "rename")
-
-
-def test_marker_lifecycle_matches_rename_twin(spark, marker):
-    """The full lifecycle produces identical answers on a rename twin:
-    COW upsert, MOR upsert + tombstone, resolved read, compaction,
-    point lookup. The marker table keeps NO kb= dirs at the root (all
-    data in hidden versioned dirs + manifest)."""
-    tmp = tempfile.mkdtemp(prefix="keyed_twin_")
-    try:
-        twin = f"{tmp}/tab"
-        base = spark.range(2_000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("v"), F.lit("base").alias("tag")
-        )
-        write_keyed_table(base, twin, ["k"], num_buckets=8)  # rename twin
-        for path in (marker, twin):
-            upsert_keyed_table(
-                spark, path, _ups(spark, [(3, 33, "cow"), (4_000, 1, "ins")]), mode="cow"
-            )
-            upsert_keyed_table(spark, path, _ups(spark, [(5, 55, "mor")]), mode="mor")
-            delete_from_keyed_table(
-                spark, path, spark.createDataFrame([(7,)], "k long"), mode="mor"
-            )
-        got_m, got_r = read_keyed_table(spark, marker), read_keyed_table(spark, twin)
-        assert _rows(got_m) == _rows(got_r)
-        assert got_m.count() == 2_000  # +1 insert -1 delete
-        for path in (marker, twin):
-            out = compact_keyed_table(spark, path)
-            assert out["deltas_folded"] == 2
-        assert _rows(read_keyed_table(spark, marker)) == _rows(read_keyed_table(spark, twin))
-        look_m = lookup_keys(spark, marker, [3, 5, 7, 4_000, 999_999])
-        look_r = lookup_keys(spark, twin, [3, 5, 7, 4_000, 999_999])
-        assert _rows(look_m) == _rows(look_r)
-        assert look_m.count() == 3  # 7 deleted, 999999 absent
-        # layout: nothing at the marker root resolves by dir presence
-        names = set(os.listdir(marker))
-        assert not any(n.startswith("kb=") for n in names)
-        assert "_commits" in names
-        assert any(n.startswith("_b") and ".v" in n for n in names)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
+def test_marker_lifecycle_matches_expected_rows(spark, marker):
+    """The full lifecycle answers exactly the expected rows: COW upsert,
+    MOR upsert + tombstone, resolved read, compaction, point lookup.
+    The table keeps NO kb= dirs at the root (all data in hidden
+    versioned dirs + manifest)."""
+    upsert_keyed_table(
+        spark, marker, _ups(spark, [(3, 33, "cow"), (4_000, 1, "ins")]), mode="cow"
+    )
+    upsert_keyed_table(spark, marker, _ups(spark, [(5, 55, "mor")]), mode="mor")
+    delete_from_keyed_table(
+        spark, marker, spark.createDataFrame([(7,)], "k long"), mode="mor"
+    )
+    want = (
+        {(k, 2 * k, "base") for k in range(2_000) if k not in (3, 5, 7)}
+        | {(3, 33, "cow"), (4_000, 1, "ins"), (5, 55, "mor")}
+    )
+    assert _rows(read_keyed_table(spark, marker)) == want  # +1 insert -1 delete
+    assert compact_keyed_table(spark, marker)["deltas_folded"] == 2
+    assert _rows(read_keyed_table(spark, marker)) == want
+    look = lookup_keys(spark, marker, [3, 5, 7, 4_000, 999_999])
+    assert _rows(look) == {(3, 33, "cow"), (5, 55, "mor"), (4_000, 1, "ins")}
+    # layout: nothing at the root resolves by dir presence
+    names = set(os.listdir(marker))
+    assert not any(n.startswith("kb=") for n in names)
+    assert "_commits" in names
+    assert any(n.startswith("_b") and ".v" in n for n in names)
 
 def test_marker_mor_crash_matrix(spark, marker):
     """Kill between delta data write and _COMMITTED → the batch is
@@ -186,7 +165,7 @@ def test_marker_reload_replaces_table(spark, marker):
     the new load touches fewer buckets."""
     upsert_keyed_table(spark, marker, _ups(spark, [(1, -1, "m")]), mode="mor")
     fresh = spark.range(10).select(F.col("id").alias("k"), F.lit(0).alias("v"), F.lit("n").alias("tag"))
-    write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+    write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     got = read_keyed_table(spark, marker)
     assert got.count() == 10
     assert not os.path.exists(f"{marker}/_delta")
@@ -288,7 +267,7 @@ def test_marker_reload_meta_flips_atomically(spark, marker, monkeypatch):
 
     monkeypatch.setattr(K, "_write_meta", boom)
     with pytest.raises(RuntimeError, match="root-meta"):
-        write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+        write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     monkeypatch.setattr(K, "_write_meta", real)
     meta = K.read_keyed_meta(spark, marker)
     assert meta["num_buckets"] == 2, "embedded meta wins over the stale root cache"
@@ -298,15 +277,19 @@ def test_marker_reload_meta_flips_atomically(spark, marker, monkeypatch):
     assert {r.k for r in found.collect()} == {7, 49}  # old keys gone
 
 
-def test_commit_protocol_change_refused(spark, marker):
-    df = spark.range(5).select(F.col("id").alias("k"), F.lit(0).alias("v"))
-    with pytest.raises(ValueError, match="cannot change commit protocol"):
-        # EXPLICIT rename over marker refuses; a default-parameter
-        # re-load INHERITS the table's protocol instead (round 14)
-        write_keyed_table(df, marker, ["k"], num_buckets=2, commit="rename")
-    write_keyed_table(df, marker, ["k"], num_buckets=2)  # inherits marker
-    assert K.read_keyed_meta(spark, marker)["commit"] == "marker"
+def test_commit_protocol_change_refused(spark, marker, tmp_path):
+    """A re-load never switches protocols implicitly: over an
+    un-migrated rename-era table it refuses and names
+    migrate_keyed_table; over a manifest table it stays one."""
+    from tests.rename_era import write_rename_era_table
 
+    df = spark.range(5).select(F.col("id").alias("k"), F.lit(0).alias("v"))
+    legacy = str(tmp_path / "legacy")
+    write_rename_era_table(spark, legacy, df, ["k"], 2)
+    with pytest.raises(ValueError, match="migrate_keyed_table"):
+        write_keyed_table(df, legacy, ["k"], num_buckets=2)
+    write_keyed_table(df, marker, ["k"], num_buckets=2)
+    assert K.read_keyed_meta(spark, marker)["commit"] == "marker"
 
 def test_reload_retires_old_deltas_atomically(spark, marker, monkeypatch):
     """Second review pass: a re-load over a table with pending deltas
@@ -327,11 +310,11 @@ def test_reload_retires_old_deltas_atomically(spark, marker, monkeypatch):
 
     monkeypatch.setattr(K, "_write_commit", boom)
     with pytest.raises(RuntimeError):
-        write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+        write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     # old generation intact INCLUDING its pending delta
     assert read_keyed_table(spark, marker).filter("k = 1").first().v == -1
     monkeypatch.setattr(K, "_write_commit", real)
-    write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+    write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     got = read_keyed_table(spark, marker)
     assert got.count() == 10 and got.filter("k = 1").first().v == 0, \
         "old delta retired by the flip, not resurrected over the new table"
@@ -351,13 +334,13 @@ def test_reader_meta_and_buckets_from_one_commit(spark, marker):
     _base_df lists THAT commit's dirs — a concurrent re-load between
     the two reads cannot mismatch bucketing math and dir set."""
     meta = K.read_keyed_meta(spark, marker)
-    assert meta.get("_commit"), "marker meta carries its commit snapshot"
+    assert meta.get("_commit"), "meta carries its commit snapshot"
     # a re-load lands a new generation; the OLD snapshot still resolves
     # (grace retention) and serves the OLD table, consistently
     fresh = spark.range(7).select(
         F.col("id").alias("k"), F.lit(9).alias("v"), F.lit("g2").alias("tag")
     )
-    write_keyed_table(fresh, marker, ["k"], num_buckets=2, commit="marker")
+    write_keyed_table(fresh, marker, ["k"], num_buckets=2)
     old_view = K._base_df(spark, marker, meta)
     assert old_view.count() == 2_000, "snapshot reads stay on their generation"
     assert K.read_keyed_table(spark, marker).count() == 7
@@ -369,7 +352,7 @@ def test_reader_meta_and_buckets_from_one_commit(spark, marker):
 
 
 def test_schema_evolution_marker_protocol(spark, marker):
-    """Evolution on a marker table is one commit-manifest PUT (same
+    """Evolution is one commit-manifest PUT (same
     buckets, evolved embedded meta): old rows read NULL, the evolved
     column survives compaction, and the root meta cache may lag without
     affecting readers."""
@@ -392,3 +375,23 @@ def test_schema_evolution_marker_protocol(spark, marker):
     compact_keyed_table(spark, marker)
     tab2 = read_keyed_table(spark, marker)
     assert tab2.filter("k = 5").first().flag is True and tab2.count() == 2_000
+
+
+def test_recovery_gcs_negative_range_bucket_orphans(spark, tmp_path):
+    """Range layouts bucket keys <= -range_step into NEGATIVE ids
+    (``_b-2.v<n>``): the recovery sweep must GC their unreferenced
+    versions exactly like positive ones."""
+    path = str(tmp_path / "t")
+    df = spark.range(-25_000, 25_000).select(
+        F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+    )
+    write_keyed_table(df, path, ["k"], layout="range", range_step=10_000)
+    live = K._current_commit(spark, path)["buckets"]
+    assert "-2" in live
+    for b in ("-2", "2"):
+        shutil.copytree(f"{path}/{live[b]}", f"{path}/_b{b}.v9")
+    gc = K.recover_keyed_table(spark, path)
+    assert {"_b-2.v9", "_b2.v9"} <= set(gc["gc_buckets"])
+    assert not os.path.exists(f"{path}/_b-2.v9")
+    assert not os.path.exists(f"{path}/_b2.v9")
+    assert read_keyed_table(spark, path).count() == 50_000

@@ -303,13 +303,16 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
     # produce the byte-identical manifest a full reconciliation does,
     # while never listing outside the declared dirs.
     from hadoop_20_warehouse_fix_spark.sources.keyed import (
-        BUCKET_COL,
+        _current_commit,
         upsert_keyed_table,
         write_keyed_table,
     )
     from hadoop_20_warehouse_fix_spark.sources.manifest import (
         refresh_file_stats_manifest,
     )
+
+    def bucket_dirs(path):
+        return {int(k): f"{path}/{d}" for k, d in _current_commit(spark, path)["buckets"].items()}
 
     tmp = tempfile.mkdtemp(prefix="manifest_cd_")
     try:
@@ -318,11 +321,9 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
             F.col("id").alias("k"), (F.col("id") * 7 % 997).alias("v")
         )
         for path in (a, b):
-            # rename protocol: the declared dirs below are kb=<b> names
-            # (marker compactions declare their own _b<b>.v<n> churn via
-            # _marker_publish's changed_dirs — pinned in test_keyed_marker)
-            write_keyed_table(df, path, ["k"], num_buckets=8, commit="rename")
+            write_keyed_table(df, path, ["k"], num_buckets=8)
             write_file_stats_manifest(spark, path, cols=["k", "v"])
+        before = bucket_dirs(b)
         batch = spark.range(40).select(
             (F.col("id") * 100).alias("k"), F.lit(-1).alias("v")
         )
@@ -332,8 +333,10 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
         touched = outs[a]["touched_buckets"]
         assert touched == outs[b]["touched_buckets"]
         r_full = refresh_file_stats_manifest(spark, a)
+        # a COW batch churns each touched bucket's superseded AND new dir
+        after = bucket_dirs(b)
         r_dirs = refresh_file_stats_manifest(
-            spark, b, changed_dirs=[f"{b}/{BUCKET_COL}={t}" for t in touched]
+            spark, b, changed_dirs=[d for t in touched for d in (before[t], after[t])]
         )
         assert r_full == r_dirs
         assert r_full["added"] > 0 and r_full["removed"] > 0
@@ -357,7 +360,7 @@ def test_refresh_changed_dirs_equals_full_reconcile(spark):
             refresh_file_stats_manifest(spark, b, changed_dirs=[tmp])
         # declaring an untouched dir is harmless (no-op rows kept)
         r_noop = refresh_file_stats_manifest(
-            spark, b, changed_dirs=[f"{b}/{BUCKET_COL}={touched[0]}"]
+            spark, b, changed_dirs=[after[touched[0]]]
         )
         assert r_noop["added"] == 0 and r_noop["removed"] == 0
     finally:
@@ -419,7 +422,7 @@ def test_manifest_on_marker_commit_keyed_table(spark):
             F.col("id").alias("k"), (F.col("id") % 97).alias("v")
         )
         write_keyed_table(
-            df, path, ["k"], num_buckets=8, commit="marker", sort_cols=["k"]
+            df, path, ["k"], num_buckets=8, sort_cols=["k"]
         )
         mpath = write_file_stats_manifest(spark, path, cols=["k", "v"])
         m = spark.read.parquet(mpath)

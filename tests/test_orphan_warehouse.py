@@ -114,3 +114,34 @@ def test_bpe_save_merges_survives_orphaned_location(spark):
         assert bpe_load_merges(spark, t) == [("a", "b"), ("ab", "c")]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_ensure_managed_creatable_resolves_current_database(spark):
+    """An unqualified name resolves in the CURRENT database for both
+    the existence check and the path: with ``other`` current, clearing
+    ``t_live`` must leave ``default.t_live`` (same bare name, live
+    table) intact, and must clear ``other``'s own stranded directory."""
+    from hadoop_20_warehouse_fix_spark.sources.writers import (
+        ensure_managed_creatable,
+    )
+
+    prev = spark.catalog.currentDatabase()
+    try:
+        spark.sql("DROP TABLE IF EXISTS default.t_live")
+        spark.range(5).write.format("parquet").saveAsTable("default.t_live")
+        spark.sql("CREATE DATABASE IF NOT EXISTS other")
+        spark.catalog.setCurrentDatabase("other")
+        ensure_managed_creatable(spark, "t_live")
+        assert spark.table("default.t_live").count() == 5
+        loc = spark.catalog.getDatabase("other").locationUri
+        orphan = os.path.join(loc[len("file:") :] if loc.startswith("file:") else loc, "t_live")
+        os.makedirs(orphan, exist_ok=True)
+        with open(os.path.join(orphan, "orphan-part-00000.parquet"), "w") as f:
+            f.write("stale")
+        ensure_managed_creatable(spark, "t_live")
+        assert not os.path.exists(orphan)
+        assert spark.table("default.t_live").count() == 5
+    finally:
+        spark.catalog.setCurrentDatabase(prev)
+        spark.sql("DROP TABLE IF EXISTS default.t_live")
+        spark.sql("DROP DATABASE IF EXISTS other CASCADE")
